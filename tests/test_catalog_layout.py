@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import datetime
 import os
+from urllib.parse import urlparse
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -173,7 +174,7 @@ def test_compaction_cache_fault_injection(spark, tmp_path):
     import glob
     import shutil as sh
 
-    from youtube_data_lakehouse_and_analysis_spark.catalog import _repo_root
+    from youtube_data_lakehouse_and_analysis_spark.catalog import _cache_intact, _repo_root
 
     src_dir = tmp_path / "sf_fault"
     src_dir.mkdir()
@@ -206,3 +207,15 @@ def test_compaction_cache_fault_injection(spark, tmp_path):
     with open(p, "wb") as fh:
         fh.write(blob[: len(blob) // 2])
     assert load(spark, str(src_dir), "lineitem").count() == expected
+
+    # damage 3: garbage _GRAFT_META.json.  An unparseable manifest must
+    # fail validation like any other damage and get the copy rebuilt in
+    # place — not a silent raw single-row-group read that every later
+    # process repeats because the damaged copy is never replaced.
+    with open(os.path.join(dest, "_GRAFT_META.json"), "w") as fh:
+        fh.write("{not json")
+    df = load(spark, str(src_dir), "lineitem")
+    assert df.count() == expected
+    assert _cache_intact(dest)
+    files = df.inputFiles()
+    assert files and all(os.path.dirname(urlparse(f).path) == dest for f in files)

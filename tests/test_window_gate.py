@@ -56,12 +56,7 @@ WHITELIST = {
     "po01_mom_growth": "lag over one-row-per-month rollup (bounded by calendar)",
     "w13_gini_concentration": "prefix sums over the whole-dollar spend histogram (domain-bounded)",
     "ta20_merge_apply": "row_number over the top-_N_MERGES merge list (8 rows)",
-    "sk02_kmv_set_ops": (
-        "union-sketch merge window over the DISTINCT union of the two "
-        "K=32-row side sketches (<= 2K rows by construction; r16 moved "
-        "the merge off uh = h.distinct() onto the checkpointed side "
-        "sketches, so the window now sits outside the checkpoint)"
-    ),
+    "sk02_kmv_set_ops": "union-sketch merge window over the two K=32-row side sketches (<= 2K rows)",
     "sim11_pq_topk": "rank over per-query limit(K) candidate set (bounded by K)",
     "sim12_ivfpq_topk": "rank over per-query limit(K) candidate set (bounded by K)",
     "sim13_pq_recall": "rank over sampled-truth limit(K) sets (bounded by K)",

@@ -169,27 +169,28 @@ def _write_meta(dest: str, n_rows: int) -> None:
     os.rename(tmp, os.path.join(dest, _META_NAME))
 
 
-def _quick_intact(dest: str) -> bool:
+def _quick_intact(dest: str) -> dict | None:
     """Stat-only manifest validation for repeat hits: exact file set and
     per-file byte sizes (no footer reads).  Catches the documented damage
-    classes — a part file deleted or truncated after a successful build —
-    in ~0.1 ms; the footer-reading row-count check (_cache_intact) runs on
-    the first resolution per process and after rebuilds, where it also
-    catches the exotic same-size-different-content case."""
+    classes — a part file deleted or truncated after a successful build,
+    a missing or unreadable manifest — in ~0.1 ms; the footer-reading
+    row-count check (_cache_intact) runs on the first resolution per
+    process and after rebuilds, where it also catches the exotic
+    same-size-different-content case.  Returns the manifest when intact,
+    else None."""
     import json
 
-    meta_path = os.path.join(dest, _META_NAME)
     try:
-        with open(meta_path) as fh:
+        with open(os.path.join(dest, _META_NAME)) as fh:
             meta = json.load(fh)
         actual = {
             f: os.path.getsize(os.path.join(dest, f))
             for f in os.listdir(dest)
             if f.endswith(".parquet")
         }
-    except (OSError, ValueError):
-        return False
-    return actual == meta["files"]
+        return meta if actual == meta["files"] else None
+    except (OSError, ValueError, KeyError, TypeError):
+        return None
 
 
 def _cache_intact(dest: str) -> bool:
@@ -199,31 +200,24 @@ def _cache_intact(dest: str) -> bool:
     file deleted or truncated AFTER a successful build leaves _SUCCESS
     intact, and a bare ``spark.read.parquet`` over the survivors returns
     a SILENTLY SHORT result — the one failure mode a cache must never
-    have.  The manifest pins the exact file set, per-file byte sizes,
-    and total row count; validation is os.stat plus parquet FOOTER reads
-    (no data scan).  Any mismatch — including a missing manifest from a
-    pre-r12 build — fails the hit, and the caller rebuilds from source.
+    have.  The manifest pins the exact file set, per-file byte sizes
+    (_quick_intact), and total row count, checked here against the
+    parquet FOOTERS (no data scan).  Any mismatch — including a missing
+    or garbage manifest — fails the hit, and the caller rebuilds from
+    source.
     """
-    import json
-
     import pyarrow.parquet as pq
 
-    meta_path = os.path.join(dest, _META_NAME)
-    if not os.path.exists(meta_path):
+    meta = _quick_intact(dest)
+    if meta is None:
         return False
-    with open(meta_path) as fh:
-        meta = json.load(fh)
-    actual = {
-        f: os.path.getsize(os.path.join(dest, f))
-        for f in os.listdir(dest)
-        if f.endswith(".parquet")
-    }
-    if actual != meta["files"]:
+    try:
+        total = sum(
+            pq.ParquetFile(os.path.join(dest, f)).metadata.num_rows for f in meta["files"]
+        )
+    except (OSError, ValueError):
         return False
-    total = 0
-    for f in actual:
-        total += pq.ParquetFile(os.path.join(dest, f)).metadata.num_rows
-    return total == meta["n_rows"]
+    return total == meta.get("n_rows")
 
 
 def _compacted(spark: SparkSession, src: str, name: str, raw_fn) -> tuple[DataFrame, str | None]:

@@ -682,8 +682,9 @@ def sk02_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hash plus a global two-phase top-K window over it), and its
     # ustats semi-join uh ⋉ usk was an identity (usk ⊆ uh), so cnt/hk
     # read directly off the merged sketch are value-identical.  Measured
-    # interleaved ×7 at sf0.1 (tools/ab_r16_pass4.py): 1.141 → 0.973 s
-    # median (−15%), row-identical in-run.
+    # interleaved ×7 at sf0.1: 1.141 → 0.973 s median (−15%),
+    # row-identical in-run (reproduce: tools/ab.py
+    # 27c06c4:sk02_kmv_set_ops sk02_kmv_set_ops).
     usk = _topk_smallest(sk.select("h").distinct(), [], _KMV_K).select("h")
     ustats = usk.agg(F.count("*").alias("cnt"), F.max("h").alias("hk"))
     ha = h.filter(F.col("event_type") == _KMV_A).select("h")
@@ -937,8 +938,9 @@ def sk04_theta_a_not_b(spark: SparkSession, sf_dir: str) -> DataFrame:
     # counted in n_a_not_b iff it appears with side YA and never YB,
     # exactly the full_outer null-pattern the old form counted (on
     # distinct inputs countDistinct degenerated to count).  Measured
-    # interleaved ×7 at sf0.1, steal ≤0.43% (tools/ab_r16_pass3.py):
-    # 0.879 → 0.609 s median (−31%), row-identical in-run.
+    # interleaved ×7 at sf0.1, steal ≤0.43%: 0.879 → 0.609 s median
+    # (−31%), row-identical in-run (reproduce: tools/ab.py
+    # 27c06c4:sk04_theta_a_not_b sk04_theta_a_not_b).
     flags = o.groupBy("o_custkey").agg(
         F.max(F.col("side") == _SK04_YA).alias("in_a"),
         F.max(F.col("side") == _SK04_YB).alias("in_b"),

@@ -573,8 +573,9 @@ def dq04_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two-level form hash-aggregates map-side and shuffles one row per
     DISTINCT (col, v) instead, leaving only the bounded per-column
     rollup to sort-aggregate.  Measured
-    interleaved ×7 at sf0.1, steal ≤0.81% (tools/ab_r16_pass4.py):
-    0.505 → 0.354 s median (−30%), row-identical in-run.  The distinct
+    interleaved ×7 at sf0.1, steal ≤0.81%: 0.505 → 0.354 s median
+    (−30%), row-identical in-run (reproduce: tools/ab.py
+    27c06c4:dq04_column_profile dq04_column_profile).  The distinct
     count stays exact per column (the profiler contract) — at 100 TB
     swap approx_count_distinct per column (a03's trade) or sk01's
     mergeable registers."""

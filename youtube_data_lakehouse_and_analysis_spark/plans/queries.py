@@ -137,10 +137,12 @@ def q05_groupwise_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberately NOT an equality: Catalyst extracts an equality above
     the join as a composite join KEY, re-shuffling BOTH sides on
     (normalized(price), orderkey) and silently destroying the exchange
-    reuse (measured — see tools/ab_q05_forms.py reuse vs reuse_ge).
+    reuse (measured: reuse vs reuse_ge in tools/ab_q05_forms.py at
+    commit 7fdd085, runnable as tools/ab.py FILE.py:FUNC arms).
     Measured interleaved at sf0.1 (7 reps/arm, row-identity asserted
-    in-run, steal ≈ 0): shipped 0.946 → reuse_ge 0.607 s medians
-    (−36%; every reuse_ge rep faster than every shipped rep)."""
+    in-run, steal ≈ 0): r15 form 0.946 → this form 0.607 s medians
+    (−36%; every new-form rep faster than every r15 rep; reproduce:
+    tools/ab.py 27c06c4:q05_groupwise_max q05_groupwise_max)."""
     li = (
         load(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_linenumber", "l_extendedprice")
@@ -193,8 +195,9 @@ def q05_groupwise_max_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort key twice.  (On data with many rows per
     group per partition the rank form's smaller shuffle would win —
     that is a different table shape.)  Measured interleaved ×7 at
-    sf0.1, steal ≤0.07% (tools/ab_r16_pass3.py): 0.447 → 0.371 s median
-    (−17%), row-identical in-run."""
+    sf0.1, steal ≤0.07%: 0.447 → 0.371 s median (−17%), row-identical
+    in-run (reproduce: tools/ab.py 27c06c4:q05_groupwise_max_window
+    q05_groupwise_max_window)."""
     w = Window.partitionBy("l_orderkey")
     return (
         load(spark, sf_dir, "lineitem")

@@ -1171,8 +1171,9 @@ def sim14_index_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     projections of the same table planned as TWO parquet scans (Spark
     does not dedupe identical scan subtrees).  Row-identical: each
     embedding contributes exactly one ivf_cell row and one lsh_bucket
-    row in both forms.  Measured interleaved ×7 at sf0.1, steal ≤0.05%
-    (tools/ab_r16_pass3.py): 0.659 → 0.594 s median (−10%)."""
+    row in both forms.  Measured interleaved ×7 at sf0.1, steal ≤0.05%:
+    0.659 → 0.594 s median (−10%) (reproduce: tools/ab.py
+    27c06c4:sim14_index_balance sim14_index_balance)."""
     emb = load(spark, sf_dir, "embeddings")
     q = emb.select(
         F.col("label").cast("string").alias("ivf_b"),

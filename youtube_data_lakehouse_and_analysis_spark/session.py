@@ -40,7 +40,8 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # Adopted r14 (SCALE.md "partition knee", tools/ab_partitions.py):
+        # Adopted r14 (SCALE.md "partition knee"; the A/B/C harness is
+        # tools/ab_partitions.py at commit 7fdd085, since deleted):
         # shuffles START at 8× the session's core count and AQE
         # coalesces back (parallelismFirst stays default true).
         # Measured on the 32-core bench session (init=256): frozen
