@@ -941,6 +941,8 @@ def sk04_theta_a_not_b(spark: SparkSession, sf_dir: str) -> DataFrame:
     # interleaved ×7 at sf0.1, steal ≤0.43%: 0.879 → 0.609 s median
     # (−31%), row-identical in-run (reproduce: tools/ab.py
     # 27c06c4:sk04_theta_a_not_b sk04_theta_a_not_b).
+    # Precondition: o_custkey is non-null (a TPC-H FK); a NULL group would be
+    # counted here, where the old countDistinct form ignored it.
     flags = o.groupBy("o_custkey").agg(
         F.max(F.col("side") == _SK04_YA).alias("in_a"),
         F.max(F.col("side") == _SK04_YB).alias("in_b"),

@@ -11,16 +11,92 @@ Scale notes (100 TB design):
     (/root/reference/app.py:335,383) and the DuckDB oracle hashes naive-UTC
     timestamps, so both engines must agree.
   * Arrow enabled — fast toPandas()/pandas_udf exchange.
+  * ``file:`` permissions set in-process — without Hadoop's native library
+    the stock local file system forks one ``chmod`` per file, ``.crc`` file
+    and directory a write creates (650 a lakehouse pass at 100 videos), a
+    cost that scales with file count, not data. ``jvm/NioLocalFileSystem``
+    sets the same mode bits through ``java.nio``; javac compiles it into
+    ``spark-warehouse/jvm/`` on the first session. On a cluster the
+    warehouse is not ``file:``, so this is a local concern only.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import logging
 import os
+import subprocess
+import tempfile
+import zipfile
 
+import pyspark
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+_PKG = os.path.dirname(os.path.abspath(__file__))
+_NIO_FS_SOURCE = os.path.join(_PKG, "jvm", "NioLocalFileSystem.java")
+NIO_FS_CLASS = "youtube_data_lakehouse_and_analysis_spark.jvm.NioLocalFileSystem"
+_log = logging.getLogger(__name__)
+
+
+def nio_fs_jar_path() -> str:
+    """Where the compiled shim lives: keyed by the source's content hash,
+    under the (gitignored) warehouse that already serves as the cache."""
+    with open(_NIO_FS_SOURCE, "rb") as f:
+        key = hashlib.sha256(f.read()).hexdigest()[:12]
+    return os.path.join(os.path.dirname(_PKG), "spark-warehouse", "jvm", f"{key}.jar")
+
+
+def _build_nio_fs_jar() -> str | None:
+    """The shim's jar, compiled on first use against pyspark's bundled
+    Hadoop API; None (and one warning) when it cannot be built, in which
+    case sessions keep the stock local file system."""
+    jar = nio_fs_jar_path()
+    if os.path.exists(jar):
+        return jar
+    jars = os.path.join(os.path.dirname(pyspark.__file__), "jars")
+    api = os.pathsep.join(glob.glob(os.path.join(jars, "hadoop-client-api-*.jar")))
+    try:
+        os.makedirs(os.path.dirname(jar), exist_ok=True)
+        # build aside, then rename: concurrent processes never see a torn jar
+        with tempfile.TemporaryDirectory(dir=os.path.dirname(jar)) as tmp:
+            cmd = ["javac", "--release", "17", "-cp", api, "-d", tmp, _NIO_FS_SOURCE]
+            subprocess.run(cmd, check=True, capture_output=True, text=True)
+            staged = os.path.join(tmp, "fs.jar")
+            with zipfile.ZipFile(staged, "w") as z:
+                for cls in glob.glob(os.path.join(tmp, "**", "*.class"), recursive=True):
+                    z.write(cls, os.path.relpath(cls, tmp))
+            os.replace(staged, jar)
+    except (OSError, subprocess.CalledProcessError) as exc:
+        _log.warning("local writes fork chmod per file: %s %s", exc, getattr(exc, "stderr", ""))
+        return None
+    return jar
+
+
+def _local_fs_conf() -> dict[str, str]:
+    """Confs that point ``file:`` at the shim. Only for a JVM that can load
+    it: one this call launches (the jar goes on its classpath), or one
+    already launched with the jar. A reused JVM without it keeps the stock
+    class. ``fs.file.impl`` is set explicitly because hive-exec registers
+    its own ``file:`` class through the service loader."""
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        jar = _build_nio_fs_jar()
+    elif SparkContext._jvm is not None:
+        # the class's resource URL names the jar the JVM was launched with
+        # (reading java.class.path over py4j took ~45 ms on a 4-core host)
+        loader = SparkContext._jvm.java.lang.ClassLoader.getSystemClassLoader()
+        url = loader.getResource(NIO_FS_CLASS.replace(".", "/") + ".class")
+        jar = nio_fs_jar_path()
+        jar = jar if url is not None and f"/{os.path.basename(jar)}!/" in url.toString() else None
+    else:
+        jar = None
+    if jar is None:
+        return {}
+    return {"spark.driver.extraClassPath": jar, "spark.hadoop.fs.file.impl": NIO_FS_CLASS}
 
 
 def get_spark(
@@ -88,7 +164,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_local_fs_conf(), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
