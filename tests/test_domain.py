@@ -126,9 +126,11 @@ def test_q5_window_and_join_forms_agree(warehouse):
 def test_reingest_idempotent(spark, warehouse):
     """Re-writing bronze for the same channels must not duplicate rows
     (the reference 'handles' this by swallowing duplicate-key errors,
-    app.py:392-394; we overwrite partitions)."""
+    app.py:392-394; we overwrite partitions). The four entities are
+    overwritten by concurrent jobs, so each is checked."""
     write_bronze(warehouse["raw"], warehouse["bronze_dir"])
-    assert read_bronze(spark, warehouse["bronze_dir"], "video").count() == 4
+    counts = {name: read_bronze(spark, warehouse["bronze_dir"], name).count() for name in ENTITIES}
+    assert counts == {"channel": 2, "playlist": 2, "video": 4, "comment": 3}
 
 
 def test_present_bounded_display_and_render(spark, capsys):

@@ -1,6 +1,6 @@
 """Silver layer — the reference's MongoDB→MySQL migration (EP2,
-app.py:260-399) as ONE Spark job per entity instead of a per-collection
-Python loop (C2, app.py:404-415).
+app.py:260-399) as four concurrent per-entity Spark jobs instead of a
+per-collection Python loop (C2, app.py:404-415).
 
 Warehouse semantics follow the migrate path exactly (SURVEY.md §2.8 note —
 the pandas cleaning block app.py:218-233 is dead code; what reaches MySQL
@@ -11,7 +11,8 @@ is `.get(k, default)` + strptime):
   comment  — pass-through                                (app.py:372-386)
 
 Scale: each entity is an independent scan→project→write — embarrassingly
-parallel; writes are partitioned by channel for downstream pruning.
+parallel, so the four run at once (`bronze.for_each_entity`); silver
+writes are not partitioned.
 """
 
 from __future__ import annotations
@@ -19,8 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import ENTITIES, SILVER
-from ..sources.bronze import read_bronze
+from ..schemas import SILVER
+from ..sources.bronze import for_each_entity, read_bronze
 
 
 def to_silver(name: str, bronze_df: DataFrame) -> DataFrame:
@@ -45,12 +46,15 @@ def to_silver(name: str, bronze_df: DataFrame) -> DataFrame:
 
 
 def migrate(spark: SparkSession, bronze_dir: str, silver_dir: str) -> None:
-    """EP2 as one job: all channels, all entities — no loop, idempotent
-    overwrite (fixes C3)."""
-    for name in ENTITIES:
+    """EP2 as four concurrent per-entity jobs over all channels,
+    idempotent overwrite (fixes C3)."""
+
+    def write(name: str) -> None:
         to_silver(name, read_bronze(spark, bronze_dir, name)).write.mode("overwrite").parquet(
             f"{silver_dir}/{name}"
         )
+
+    for_each_entity(spark, write)
 
 
 def read_silver(spark: SparkSession, silver_dir: str, name: str) -> DataFrame:
