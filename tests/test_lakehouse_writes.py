@@ -1,18 +1,22 @@
 """The per-entity bronze writes and silver migrations run as concurrent
 Spark jobs (`bronze.for_each_entity`): every job keeps the caller's job
 group and runs in its own SQL execution, an entity that fails leaves the
-other three written, and the first failure in ENTITIES order is raised."""
+other three written, and the first failure in ENTITIES order is raised.
+Reading a bronze entity with more partition directories than Spark's
+default parallel-discovery threshold (32) lists them on the driver: no
+listing job."""
 
 from __future__ import annotations
 
+import datetime
 import os
 import time
 
 import pytest
 from py4j.protocol import Py4JJavaError
 
-from youtube_data_lakehouse_and_analysis_spark.plans.silver import migrate
-from youtube_data_lakehouse_and_analysis_spark.schemas import ENTITIES
+from youtube_data_lakehouse_and_analysis_spark.plans.silver import migrate, read_silver
+from youtube_data_lakehouse_and_analysis_spark.schemas import BRONZE, ENTITIES
 from youtube_data_lakehouse_and_analysis_spark.sources import youtube_api as yt
 from youtube_data_lakehouse_and_analysis_spark.sources.bronze import (
     for_each_entity,
@@ -33,6 +37,44 @@ def api(spark):
     }
 
 
+@pytest.fixture(scope="module")
+def many_videos(spark, api, tmp_path_factory):
+    """A bronze dir whose comments span 40 ``video_id=`` directories, above
+    the 32 at which Spark's default partition discovery launches a listing
+    job; returns the dir and the comment rows written."""
+    day = datetime.datetime(2024, 1, 1)
+    rows = [
+        (
+            f"vid{v:02d}",
+            f"c{v:02d}_{i}",
+            f"author{i}",
+            f"comment {i} on {v}",
+            day + datetime.timedelta(hours=v, minutes=i),
+        )
+        for v in range(40)
+        for i in range(2)
+    ]
+    bronze_dir = str(tmp_path_factory.mktemp("many_videos") / "bronze")
+    write_bronze({**api, "comment": spark.createDataFrame(rows, BRONZE["comment"])}, bronze_dir)
+    return bronze_dir, rows
+
+
+def _jobs_of(spark, group: str, fn):
+    """Run ``fn()`` under job group ``group``; return its result and the ids
+    of the jobs it ran, after checking that none ran outside the group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker is fed by listener events
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    return result, tracker.getJobIdsForGroup(group)
+
+
 def _sql_execution_of(spark, job_ids: list[int]) -> dict[int, tuple[int, int]]:
     """job id -> (execution id, root execution id) from the SQL status store."""
     executions = spark._jsparkSession.sharedState().statusStore().executionsList()
@@ -47,26 +89,13 @@ def _sql_execution_of(spark, job_ids: list[int]) -> dict[int, tuple[int, int]]:
 
 @pytest.mark.parametrize("step", ["bronze.write", "silver.migrate"])
 def test_jobs_keep_the_callers_group_and_their_own_execution(spark, api, tmp_path, step):
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
     bronze_dir, silver_dir = str(tmp_path / "bronze"), str(tmp_path / "silver")
     if step == "silver.migrate":
         write_bronze(api, bronze_dir)
-    ungrouped = set(tracker.getJobIdsForGroup(None))
-    group = f"test-lakehouse-writes-{step}"
-    sc.setJobGroup(group, step)
-    try:
-        if step == "bronze.write":
-            write_bronze(api, bronze_dir)
-        else:
-            migrate(spark, bronze_dir, silver_dir)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker is fed by listener events
-    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
-    # one write job per entity: three videos stay under the 32-path
-    # threshold above which reading bronze/comment launches a listing job
-    jobs = tracker.getJobIdsForGroup(group)
+        _, jobs = _jobs_of(spark, f"test-{step}", lambda: migrate(spark, bronze_dir, silver_dir))
+    else:
+        _, jobs = _jobs_of(spark, f"test-{step}", lambda: write_bronze(api, bronze_dir))
+    # one write job per entity
     assert len(jobs) == len(ENTITIES)
     # a shared copy of the caller's local properties would put all four
     # jobs under one SQL execution id, nested under each other
@@ -74,6 +103,26 @@ def test_jobs_keep_the_callers_group_and_their_own_execution(spark, api, tmp_pat
     assert sorted(executions) == sorted(jobs)
     assert len({ex for ex, _ in executions.values()}) == len(ENTITIES)
     assert all(ex == root for ex, root in executions.values())
+
+
+def test_reading_many_partitions_runs_no_listing_job(spark, many_videos):
+    bronze_dir, rows = many_videos
+    assert len([d for d in os.listdir(f"{bronze_dir}/comment") if d.startswith("video_id=")]) == 40
+    df, jobs = _jobs_of(
+        spark, "test-read-many-partitions", lambda: read_bronze(spark, bronze_dir, "comment")
+    )
+    assert jobs == []
+    assert sorted(map(tuple, df.collect())) == sorted(rows)  # video_id restored from the path
+
+
+def test_migrating_many_partitions_runs_one_job_per_entity(spark, many_videos, tmp_path):
+    bronze_dir, rows = many_videos
+    silver_dir = str(tmp_path / "silver")
+    _, jobs = _jobs_of(
+        spark, "test-migrate-many-partitions", lambda: migrate(spark, bronze_dir, silver_dir)
+    )
+    assert len(jobs) == len(ENTITIES)
+    assert sorted(map(tuple, read_silver(spark, silver_dir, "comment").collect())) == sorted(rows)
 
 
 def test_unwritable_entity_raises_after_the_others_are_written(spark, api, tmp_path):

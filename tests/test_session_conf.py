@@ -8,9 +8,24 @@ In local mode the driver JVM is the executor, so only the driver conf
 is load-bearing here; on a real cluster the executor conf is the one
 that matters.  This gate pins BOTH so the factory is cluster-correct
 as its docstring promises, not just locally lucky.
+
+Two confs remove fixed driver-side costs: partition discovery never
+launches a listing job, and PySpark Column calls capture no Python call
+site (errors keep their classes, and lose only the file:line context).
 """
 
 from __future__ import annotations
+
+import os
+
+import pytest
+from pyspark.errors import AnalysisException
+from pyspark.errors import utils as errors_utils
+from pyspark.sql import functions as F
+
+from youtube_data_lakehouse_and_analysis_spark.sources import youtube_api as yt
+
+VIDEOS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "youtube", "videos")
 
 GCLOCKER_FLAGS = "-XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=100"
 
@@ -31,3 +46,26 @@ def test_session_core_confs(spark):
     cpus = spark.sparkContext.defaultParallelism
     init = int(spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum"))
     assert init == 8 * cpus
+
+
+def test_driver_side_fixed_costs_off(spark):
+    threshold = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold")
+    assert threshold == str(2**31 - 1)
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+def test_building_a_source_read_captures_no_call_site(spark, monkeypatch):
+    calls = []
+    capture = errors_utils._capture_call_site
+    monkeypatch.setattr(
+        errors_utils, "_capture_call_site", lambda depth: calls.append(depth) or capture(depth)
+    )
+    # read the session's conf, not a value cached before this session began
+    monkeypatch.setattr(errors_utils, "_enable_debugging_cache", None)
+    yt.read_videos(spark, VIDEOS)
+    assert calls == []
+
+
+def test_bad_column_still_raises_analysis_exception(spark):
+    with pytest.raises(AnalysisException, match="no_such_column"):
+        spark.range(1).select(F.col("no_such_column"))
