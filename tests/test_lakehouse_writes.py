@@ -8,7 +8,6 @@ listing job."""
 
 from __future__ import annotations
 
-import datetime
 import os
 import time
 
@@ -16,47 +15,12 @@ import pytest
 from py4j.protocol import Py4JJavaError
 
 from youtube_data_lakehouse_and_analysis_spark.plans.silver import migrate, read_silver
-from youtube_data_lakehouse_and_analysis_spark.schemas import BRONZE, ENTITIES
-from youtube_data_lakehouse_and_analysis_spark.sources import youtube_api as yt
+from youtube_data_lakehouse_and_analysis_spark.schemas import ENTITIES
 from youtube_data_lakehouse_and_analysis_spark.sources.bronze import (
     for_each_entity,
     read_bronze,
     write_bronze,
 )
-
-FIX = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "youtube")
-
-
-@pytest.fixture(scope="module")
-def api(spark):
-    return {
-        "channel": yt.read_channels(spark, f"{FIX}/channels"),
-        "playlist": yt.read_playlists(spark, f"{FIX}/playlists"),
-        "video": yt.read_videos(spark, f"{FIX}/videos"),
-        "comment": yt.read_comments(spark, f"{FIX}/comments"),
-    }
-
-
-@pytest.fixture(scope="module")
-def many_videos(spark, api, tmp_path_factory):
-    """A bronze dir whose comments span 40 ``video_id=`` directories, above
-    the 32 at which Spark's default partition discovery launches a listing
-    job; returns the dir and the comment rows written."""
-    day = datetime.datetime(2024, 1, 1)
-    rows = [
-        (
-            f"vid{v:02d}",
-            f"c{v:02d}_{i}",
-            f"author{i}",
-            f"comment {i} on {v}",
-            day + datetime.timedelta(hours=v, minutes=i),
-        )
-        for v in range(40)
-        for i in range(2)
-    ]
-    bronze_dir = str(tmp_path_factory.mktemp("many_videos") / "bronze")
-    write_bronze({**api, "comment": spark.createDataFrame(rows, BRONZE["comment"])}, bronze_dir)
-    return bronze_dir, rows
 
 
 def _jobs_of(spark, group: str, fn):

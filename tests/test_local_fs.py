@@ -3,19 +3,22 @@ checksummed LocalFileSystem, with permissions set through java.nio instead of
 one forked ``chmod`` per file, ``.crc`` file and directory. These tests pin
 that it is in use, that it sets exactly the requested bits, that modes above
 0777 keep chmod's semantics, that a lakehouse write leaves Hadoop's default
-modes, and that a bronze write forks no ``chmod`` at all."""
+modes, and that a bronze write forks no ``chmod`` at all. The jar that
+carries the shim also carries an empty ``yarn-default.xml`` (see
+test_session_conf.py) and is keyed by every file it is built from."""
 
 from __future__ import annotations
 
 import logging
 import os
+import shutil
 import stat
 import subprocess
 import sys
+import zipfile
 
 from youtube_data_lakehouse_and_analysis_spark import session
 from youtube_data_lakehouse_and_analysis_spark.plans.silver import migrate
-from youtube_data_lakehouse_and_analysis_spark.sources import youtube_api as yt
 from youtube_data_lakehouse_and_analysis_spark.sources.bronze import write_bronze
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -56,18 +59,12 @@ def test_sticky_mode_falls_back_and_keeps_the_bit(spark, tmp_path):
     assert _set_mode(spark, str(d), "1777") == 0o1777
 
 
-def test_lakehouse_write_leaves_default_modes(spark, tmp_path):
+def test_lakehouse_write_leaves_default_modes(spark, api, tmp_path):
     fsp = spark._jvm.org.apache.hadoop.fs.permission.FsPermission
     umask = fsp.getUMask(spark._jsc.hadoopConfiguration())
     want_file = fsp.getFileDefault().applyUMask(umask).toShort()
     want_dir = fsp.getDirDefault().applyUMask(umask).toShort()
     bronze_dir, silver_dir = str(tmp_path / "bronze"), str(tmp_path / "silver")
-    api = {
-        "channel": yt.read_channels(spark, f"{FIX}/channels"),
-        "playlist": yt.read_playlists(spark, f"{FIX}/playlists"),
-        "video": yt.read_videos(spark, f"{FIX}/videos"),
-        "comment": yt.read_comments(spark, f"{FIX}/comments"),
-    }
     write_bronze(api, bronze_dir)
     migrate(spark, bronze_dir, silver_dir)
     seen = {"f": 0, "d": 0}
@@ -136,3 +133,26 @@ def test_reused_jvm_without_the_jar_gets_no_shim_conf(spark, monkeypatch, tmp_pa
     assert session._local_fs_conf()["spark.hadoop.fs.file.impl"] == session.NIO_FS_CLASS
     monkeypatch.setattr(session, "nio_fs_jar_path", lambda: str(tmp_path / "other.jar"))
     assert session._local_fs_conf() == {}
+
+
+def test_jar_key_covers_every_resource(monkeypatch, tmp_path):
+    jvm_dir = tmp_path / "jvm"
+    shutil.copytree(session._JVM_DIR, jvm_dir)
+    monkeypatch.setattr(session, "_JVM_DIR", str(jvm_dir))
+    key = os.path.basename(session.nio_fs_jar_path())
+    assert key == os.path.basename(session.nio_fs_jar_path())
+    resource = jvm_dir / "yarn-default.xml"
+    resource.write_bytes(resource.read_bytes() + b"\n")
+    assert os.path.basename(session.nio_fs_jar_path()) != key
+
+
+def test_built_jar_carries_an_empty_yarn_default(monkeypatch, tmp_path):
+    monkeypatch.setattr(session, "nio_fs_jar_path", lambda: str(tmp_path / "jvm" / "x.jar"))
+    jar = session._build_nio_fs_jar()
+    with zipfile.ZipFile(jar) as z:
+        names = set(z.namelist())
+        shipped = z.read("yarn-default.xml")
+    assert session.NIO_FS_CLASS.replace(".", "/") + ".class" in names
+    with open(os.path.join(session._JVM_DIR, "yarn-default.xml"), "rb") as f:
+        assert shipped == f.read()
+    assert b"<property>" not in shipped

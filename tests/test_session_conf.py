@@ -12,6 +12,10 @@ as its docstring promises, not just locally lucky.
 Two confs remove fixed driver-side costs: partition discovery never
 launches a listing job, and PySpark Column calls capture no Python call
 site (errors keep their classes, and lose only the file:line context).
+
+The session's Hadoop Configuration carries no YARN defaults (the session
+jar ships an empty ``yarn-default.xml``), keeps the core and mapred ones,
+and stays that way after the lakehouse's writes.
 """
 
 from __future__ import annotations
@@ -23,6 +27,7 @@ from pyspark.errors import AnalysisException
 from pyspark.errors import utils as errors_utils
 from pyspark.sql import functions as F
 
+from youtube_data_lakehouse_and_analysis_spark.plans.silver import migrate
 from youtube_data_lakehouse_and_analysis_spark.sources import youtube_api as yt
 
 VIDEOS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "youtube", "videos")
@@ -69,3 +74,21 @@ def test_building_a_source_read_captures_no_call_site(spark, monkeypatch):
 def test_bad_column_still_raises_analysis_exception(spark):
     with pytest.raises(AnalysisException, match="no_such_column"):
         spark.range(1).select(F.col("no_such_column"))
+
+
+def _assert_no_yarn_defaults(spark):
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    assert conf.get("yarn.resourcemanager.address") is None
+    assert conf.size() < 700  # 1,112 with hadoop-client-api's yarn-default.xml
+    assert conf.get("fs.defaultFS") == "file:///"
+    assert conf.get("mapreduce.fileoutputcommitter.algorithm.version") == "1"
+
+
+def test_hadoop_conf_has_no_yarn_defaults(spark):
+    _assert_no_yarn_defaults(spark)
+
+
+def test_lakehouse_writes_bring_no_yarn_defaults_back(spark, many_videos, tmp_path):
+    bronze_dir, _ = many_videos
+    migrate(spark, bronze_dir, str(tmp_path / "silver"))
+    _assert_no_yarn_defaults(spark)

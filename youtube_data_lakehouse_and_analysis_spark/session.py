@@ -18,6 +18,17 @@ Scale notes (100 TB design):
     sets the same mode bits through ``java.nio``; javac compiles it into
     ``spark-warehouse/jvm/`` on the first session. On a cluster the
     warehouse is not ``file:``, so this is a local concern only.
+  * no YARN defaults in the Hadoop Configuration — every write task
+    deserializes the session's whole conf, and every Parquet file written
+    walks it (and every file read copies it). The shim's jar also carries
+    an empty ``jvm/yarn-default.xml`` that shadows hadoop-client-api's, so
+    ``newHadoopConf()`` holds 592 entries (55,906 bytes serialized)
+    instead of 1,112 (111,633 bytes). Only YARN's file is emptied: no
+    code path of a ``local[N]`` session reads a ``yarn.*`` key, while
+    core and mapred defaults are read (``FileOutputCommitter`` reads the
+    ``mapreduce.fileoutputcommitter.*`` keys). The jar is on the
+    classpath only of a JVM this factory launches, so a YARN deployment
+    keeps its defaults: a local concern only.
   * partition discovery never launches a listing job — above
     ``parallelPartitionDiscovery.threshold`` directories (default 32)
     Spark lists them in a job with one task per directory, and each task
@@ -60,41 +71,61 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 _PKG = os.path.dirname(os.path.abspath(__file__))
-_NIO_FS_SOURCE = os.path.join(_PKG, "jvm", "NioLocalFileSystem.java")
+_JVM_DIR = os.path.join(_PKG, "jvm")
 NIO_FS_CLASS = "youtube_data_lakehouse_and_analysis_spark.jvm.NioLocalFileSystem"
 _log = logging.getLogger(__name__)
 
 
+def _jvm_inputs() -> list[str]:
+    """Everything the jar is built from: the ``.java`` sources under jvm/,
+    and the resources beside them (``yarn-default.xml``) that go in as they
+    are, at the jar's root."""
+    return sorted(p for p in glob.glob(os.path.join(_JVM_DIR, "*")) if os.path.isfile(p))
+
+
 def nio_fs_jar_path() -> str:
-    """Where the compiled shim lives: keyed by the source's content hash,
-    under the (gitignored) warehouse that already serves as the cache."""
-    with open(_NIO_FS_SOURCE, "rb") as f:
-        key = hashlib.sha256(f.read()).hexdigest()[:12]
+    """Where the compiled shim lives: keyed by the names and bytes of every
+    input of the jar, under the (gitignored) warehouse that already serves
+    as the cache."""
+    digest = hashlib.sha256()
+    for path in _jvm_inputs():
+        with open(path, "rb") as f:
+            digest.update(os.path.basename(path).encode() + b"\0" + f.read() + b"\0")
+    key = digest.hexdigest()[:12]
     return os.path.join(os.path.dirname(_PKG), "spark-warehouse", "jvm", f"{key}.jar")
 
 
 def _build_nio_fs_jar() -> str | None:
     """The shim's jar, compiled on first use against pyspark's bundled
     Hadoop API; None (and one warning) when it cannot be built, in which
-    case sessions keep the stock local file system."""
+    case sessions keep the stock local file system and Hadoop conf."""
     jar = nio_fs_jar_path()
     if os.path.exists(jar):
         return jar
     jars = os.path.join(os.path.dirname(pyspark.__file__), "jars")
     api = os.pathsep.join(glob.glob(os.path.join(jars, "hadoop-client-api-*.jar")))
+    inputs = _jvm_inputs()
+    sources = [p for p in inputs if p.endswith(".java")]
     try:
         os.makedirs(os.path.dirname(jar), exist_ok=True)
         # build aside, then rename: concurrent processes never see a torn jar
         with tempfile.TemporaryDirectory(dir=os.path.dirname(jar)) as tmp:
-            cmd = ["javac", "--release", "17", "-cp", api, "-d", tmp, _NIO_FS_SOURCE]
+            cmd = ["javac", "--release", "17", "-cp", api, "-d", tmp, *sources]
             subprocess.run(cmd, check=True, capture_output=True, text=True)
             staged = os.path.join(tmp, "fs.jar")
             with zipfile.ZipFile(staged, "w") as z:
                 for cls in glob.glob(os.path.join(tmp, "**", "*.class"), recursive=True):
                     z.write(cls, os.path.relpath(cls, tmp))
+                for res in inputs:
+                    if res not in sources:
+                        z.write(res, os.path.basename(res))
             os.replace(staged, jar)
     except (OSError, subprocess.CalledProcessError) as exc:
-        _log.warning("local writes fork chmod per file: %s %s", exc, getattr(exc, "stderr", ""))
+        _log.warning(
+            "local writes fork chmod per file and carry YARN's defaults: %s %s",
+            exc,
+            getattr(exc, "stderr", ""),
+        )
         return None
     return jar
 
@@ -104,7 +135,9 @@ def _local_fs_conf() -> dict[str, str]:
     it: one this call launches (the jar goes on its classpath), or one
     already launched with the jar. A reused JVM without it keeps the stock
     class. ``fs.file.impl`` is set explicitly because hive-exec registers
-    its own ``file:`` class through the service loader."""
+    its own ``file:`` class through the service loader. Being on the
+    classpath also puts the jar's empty ``yarn-default.xml`` ahead of
+    hadoop-client-api's; that needs no conf."""
     if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
         jar = _build_nio_fs_jar()
     elif SparkContext._jvm is not None:
