@@ -1,5 +1,6 @@
-"""Partitioning-invariance of the r7 histogram-CDF machinery: the cut
-tables (score/bin → bucket) must be bit-identical regardless of how the
+"""Partitioning-invariance of the histogram-CDF operator
+(operators/cdf.py) and the queries built on it: the cut tables (score/bin
+→ bucket), in both directions, must be bit-identical regardless of how the
 input is partitioned — the property that makes the histogram form safe to
 swap in for the exact NTILE at any cluster size.  Histograms are
 combine-friendly counts and the CDF is computed on the collapsed
@@ -8,29 +9,39 @@ histogram, so any divergence here means a non-associative step crept in.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
+import pytest
 
 from youtube_data_lakehouse_and_analysis_spark.catalog import load
-from youtube_data_lakehouse_and_analysis_spark.plans.corpus4 import (
-    _quality_scores,
-    _sm07a_cuts,
-)
+from youtube_data_lakehouse_and_analysis_spark.operators.cdf import cdf_cuts
+from youtube_data_lakehouse_and_analysis_spark.plans.corpus4 import _quality_scores
+from youtube_data_lakehouse_and_analysis_spark.plans.corpus5 import lm_doc_scores
 
 from .conftest import SF_DIR
 
+# the cut tables of sm07a (ascending quartiles) and ta19a (descending
+# terciles): frame builder, bin column, k, bucket column, descending
+_CUTS = {
+    "sm07a": (
+        lambda s: _quality_scores(load(s, SF_DIR, "documents")), "score", 4, "quartile", False
+    ),
+    "ta19a": (lambda s: lm_doc_scores(s, SF_DIR), "mean_condprob_scaled", 3, "t", True),
+}
 
-def _cuts_dict(df):
-    return {r["score"]: r["quartile"] for r in df.collect()}
 
+@pytest.mark.parametrize("form", list(_CUTS))
+def test_cdf_cuts_partitioning_invariant(spark, form):
+    frame, bin_col, k, out_col, descending = _CUTS[form]
+    scores = frame(spark).localCheckpoint(eager=False)
 
-def test_sm07a_cuts_partitioning_invariant(spark):
-    docs = load(spark, SF_DIR, "documents")
-    weighted = _quality_scores(docs).localCheckpoint(eager=False)
-    base = _cuts_dict(_sm07a_cuts(weighted))
+    def cuts(df):
+        table = cdf_cuts(df, bin_col, k, out_col, descending)
+        return {r[bin_col]: r[out_col] for r in table.collect()}
+
+    base = cuts(scores)
     assert base  # non-empty cut table
-    for k in (1, 3, 17):
-        alt = _cuts_dict(_sm07a_cuts(weighted.repartition(k)))
-        assert alt == base, f"cut table diverged at {k} partitions"
+    for n in (1, 3, 17):
+        alt = cuts(scores.repartition(n))
+        assert alt == base, f"cut table diverged at {n} partitions"
 
 
 def test_sm07a_rollup_partitioning_invariant(spark):

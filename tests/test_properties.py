@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -332,3 +333,44 @@ def test_bm25_term_score_monotonicity_and_bounds(tf, dl, n, tl, df):
     assert s > 0
     assert score(tf + 1, df) >= s
     assert score(tf, min(df + 1, n - 1)) <= s
+
+
+@given(
+    bins=st.lists(st.integers(min_value=-6, max_value=6), min_size=1, max_size=40),
+    k=st.sampled_from([3, 4, 5]),
+    descending=st.booleans(),
+)
+@SET
+def test_cdf_cuts_matches_python_reference(spark, bins, k, descending):
+    """operators.cdf.cdf_cuts (sm07a/w08a/ev10a ascending, ta19a
+    descending) equals the pure-Python histogram-CDF reference of the
+    stats audit on tie-heavy bins, for every bucket count in use."""
+    from collections import Counter
+
+    from youtube_data_lakehouse_and_analysis_spark.operators.cdf import cdf_cuts
+
+    from .test_stats_audit_eval import _cdf_cuts
+
+    df = spark.createDataFrame([(b,) for b in bins], "b long")
+    got = {r["b"]: r["q"] for r in cdf_cuts(df, "b", k, "q", descending).collect()}
+    assert got == _cdf_cuts(Counter(bins), k, descending)
+
+
+@pytest.mark.parametrize("descending", [False, True], ids=["asc", "desc"])
+def test_cdf_cuts_null_bin_matches_duckdb(spark, descending):
+    """A NULL bin takes Spark's place in the running sum on both engines:
+    first ascending, last descending. DuckDB sorts NULLs last either way,
+    so sql_cdf_cuts must spell the order out (ASC NULLS FIRST)."""
+    import duckdb
+
+    from youtube_data_lakehouse_and_analysis_spark.operators.cdf import cdf_cuts, sql_cdf_cuts
+
+    bins = [None, 1, 1, 2]
+    df = spark.createDataFrame([(b,) for b in bins], "b long")
+    got = {tuple(r) for r in cdf_cuts(df, "b", 4, "q", descending).collect()}
+    cte = sql_cdf_cuts("c", "t", "b", 4, "q", descending)
+    with duckdb.connect() as con:
+        con.execute("CREATE TABLE t AS SELECT * FROM (VALUES (NULL::BIGINT), (1), (1), (2)) v(b)")
+        want = set(con.execute(f"WITH {cte} SELECT b, q FROM c").fetchall())
+    assert got == want
+    assert got == ({(2, 1), (1, 3), (None, 4)} if descending else {(None, 1), (1, 3), (2, 4)})

@@ -124,12 +124,13 @@ def _ntile(n_buckets: int, ordered_keys: list) -> dict:
     return out
 
 
-def _cdf_cuts(bins: Counter, n_buckets: int) -> dict:
+def _cdf_cuts(bins: Counter, n_buckets: int, descending: bool = False) -> dict:
     """bin -> ceil(n_buckets * cdf) over the sorted bin domain (the
-    histogram-CDF assignment of ev10a/sm07a/w08a)."""
+    histogram-CDF assignment of ev10a/sm07a/w08a, and of ta19a with
+    descending=True: bucket 1 holds the highest bins)."""
     total = sum(bins.values())
     cum, out = 0, {}
-    for b in sorted(bins):
+    for b in sorted(bins, reverse=descending):
         cum += bins[b]
         out[b] = math.ceil(n_buckets * float(cum) / float(total))
     return out

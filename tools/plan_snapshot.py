@@ -1,9 +1,8 @@
-"""Dump executed-plan summaries (and optionally full formatted plans) for
-named catalog queries — the audit loop behind PLANS.md.
+"""Dump executed-plan summaries for named catalog queries — the audit
+loop behind PLANS.md. Full formatted plans: tools/capture_plans.py.
 
 Usage:
   python tools/plan_snapshot.py q01_project_filter dd17_bloom_decontaminate
-  python tools/plan_snapshot.py --full ev09_path_trigrams
   python tools/plan_snapshot.py --all            # summary table for the catalog
 
 Summary counters are the plan properties the scale review cares about:
@@ -24,7 +23,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
 def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    full = "--full" in sys.argv
     run_all = "--all" in sys.argv
 
     import __spark_entry__ as entrymod
@@ -54,10 +52,6 @@ def main() -> None:
             f"generate={plan.count('Generate')} "
             f"python={plan.count('BatchEvalPython') + plan.count('ArrowEval') + plan.count('MapInPandas')}"
         )
-        if full:
-            print(
-                spark.sparkContext._jvm.PythonSQLUtils.explainString(qe, "formatted")
-            )
     spark.stop()
 
 

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import checkpoint, load
 from ..functions.text import md5_prefix_long
+from ..operators.cdf import cdf_cuts, sql_cdf_cuts
 from .corpus2 import _BENCH_MOD, _N, _word_ngrams
 from .queries import query
 
@@ -415,15 +416,7 @@ def sm07_quality_weighted_sampling(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 _SM07A_ASSIGN_CTES = f"""{_SCORE_CTES},
-    hist AS (SELECT score, CAST(COUNT(*) AS BIGINT) AS cnt
-             FROM weighted GROUP BY score),
-    cdf AS (
-      SELECT score,
-             SUM(cnt) OVER (ORDER BY score
-                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-             SUM(cnt) OVER () AS n
-      FROM hist),
-    cuts AS (SELECT score, CAST(CEIL(4.0 * cum / n) AS INT) AS quartile FROM cdf)"""
+    {sql_cdf_cuts("cuts", "weighted", "score", 4, "quartile")}"""
 
 _SM07A_SQL = f"""WITH {_SM07A_ASSIGN_CTES},
     q AS (
@@ -441,22 +434,6 @@ _SM07A_SQL = f"""WITH {_SM07A_ASSIGN_CTES},
            CAST(MIN(score) AS BIGINT) AS min_score,
            CAST(MAX(score) AS BIGINT) AS max_score
     FROM q GROUP BY quartile"""
-
-
-def _sm07a_cuts(weighted: DataFrame) -> DataFrame:
-    """(score -> quartile) assignment table: cumulative histogram of the
-    integer score domain, quartile = CEIL(4·cdf).  The window runs over the
-    HISTOGRAM (bounded by the score domain, not the corpus), which is the
-    whole point: no per-document global sort anywhere."""
-    hist = weighted.groupBy("score").agg(F.count("*").alias("cnt"))
-    w_cum = Window.orderBy("score").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    w_all = Window.partitionBy()
-    return hist.select(
-        "score",
-        F.ceil(F.lit(4.0) * F.sum("cnt").over(w_cum) / F.sum("cnt").over(w_all))
-        .cast("int")
-        .alias("quartile"),
-    )
 
 
 @query("sm07a_histogram_cdf_sampling", _SM07A_SQL)
@@ -480,7 +457,7 @@ def sm07a_histogram_cdf_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumed twice (histogram leg + assignment join): checkpoint so the
     # two token-stream shuffles behind the scores run once
     weighted = _quality_scores(docs).transform(checkpoint)
-    cuts = _sm07a_cuts(weighted)
+    cuts = cdf_cuts(weighted, "score", 4, "quartile")
     hv = md5_prefix_long(F.col("doc_id").cast("string")) % 8
     q = weighted.join(F.broadcast(cuts), "score").select(
         "doc_id", "score", "quartile", hv.alias("hv")
@@ -531,7 +508,7 @@ def sm07b_cdf_ntile_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream)."""
     docs = load(spark, sf_dir, "documents")
     weighted = _quality_scores(docs).transform(checkpoint)
-    cuts = _sm07a_cuts(weighted)
+    cuts = cdf_cuts(weighted, "score", 4, "quartile")
     exact = weighted.select(
         "doc_id",
         "score",

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import checkpoint, load
 from ..functions.text import bind, char_array, md5_keyed, md5_prefix_long, sql_md5_prefix_long
+from ..operators.cdf import cdf_cuts, sql_cdf_cuts
 from .queries import query
 
 # ---------------------------------------------------------------------------
@@ -696,35 +697,7 @@ def ta20_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _TA19A_CUTS_CTES = f"""{_LM_DOC_CTES},
-        hist AS (SELECT mean_condprob_scaled AS s, CAST(COUNT(*) AS BIGINT) AS cnt
-                 FROM d GROUP BY s),
-        cdf AS (
-          SELECT s,
-                 SUM(cnt) OVER (ORDER BY s DESC
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-                 SUM(cnt) OVER () AS n
-          FROM hist),
-        cuts AS (SELECT s, CAST(CEIL(3.0 * cum / n) AS INT) AS t FROM cdf)"""
-
-
-def _ta19a_cuts(d: DataFrame) -> DataFrame:
-    """(mean_condprob_scaled -> tercile 1..3) over the DESC-ordered
-    cumulative score histogram — tercile 1 = head (highest scores), as in
-    ta19's DESC NTILE.  The window runs over the bounded score histogram,
-    never the per-doc table."""
-    hist = d.groupBy(F.col("mean_condprob_scaled").alias("s")).agg(
-        F.count("*").alias("cnt")
-    )
-    w_cum = Window.orderBy(F.desc("s")).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    w_all = Window.partitionBy()
-    return hist.select(
-        "s",
-        F.ceil(F.lit(3.0) * F.sum("cnt").over(w_cum) / F.sum("cnt").over(w_all))
-        .cast("int")
-        .alias("t"),
-    )
+        {sql_cdf_cuts("cuts", "d", "mean_condprob_scaled", 3, "t", descending=True)}"""
 
 
 @query(
@@ -732,7 +705,7 @@ def _ta19a_cuts(d: DataFrame) -> DataFrame:
     f"""WITH {_TA19A_CUTS_CTES}
         SELECT d.doc_id, d.lang, d.n_bigrams, d.mean_condprob_scaled,
                CASE c.t WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS bucket
-        FROM d JOIN cuts c ON d.mean_condprob_scaled = c.s""",
+        FROM d JOIN cuts c ON d.mean_condprob_scaled = c.mean_condprob_scaled""",
 )
 def ta19a_lm_gate_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ta19's head/middle/tail LM-quality buckets in the production form:
@@ -750,9 +723,9 @@ def ta19a_lm_gate_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumed twice (histogram leg + assignment join): checkpoint so the
     # bigram explode + LM joins behind the scores run once
     d = lm_doc_scores(spark, sf_dir).transform(checkpoint)
-    cuts = _ta19a_cuts(d)
+    cuts = cdf_cuts(d, "mean_condprob_scaled", 3, "t", descending=True)
     return (
-        d.join(F.broadcast(cuts), d["mean_condprob_scaled"] == cuts["s"])
+        d.join(F.broadcast(cuts), "mean_condprob_scaled")
         .select(
             "doc_id",
             "lang",
@@ -776,7 +749,7 @@ def ta19a_lm_gate_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         j AS (
           SELECT e.doc_id,
                  CASE WHEN e.t_exact = c.t THEN 1 ELSE 0 END AS ok
-          FROM exact e JOIN cuts c ON e.mean_condprob_scaled = c.s)
+          FROM exact e JOIN cuts c ON e.mean_condprob_scaled = c.mean_condprob_scaled)
         SELECT COUNT(*) AS n_docs,
                CAST(SUM(ok) AS BIGINT) AS n_agree,
                CAST(SUM(ok) AS DOUBLE) / COUNT(*) AS agree_rate
@@ -790,7 +763,7 @@ def ta19b_lm_gate_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: eval-only; the exact leg is priced as ta19 is."""
     d = lm_doc_scores(spark, sf_dir).transform(checkpoint)
-    cuts = _ta19a_cuts(d)
+    cuts = cdf_cuts(d, "mean_condprob_scaled", 3, "t", descending=True)
     exact = d.select(
         "doc_id",
         "mean_condprob_scaled",
@@ -798,9 +771,7 @@ def ta19b_lm_gate_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(Window.orderBy(F.desc("mean_condprob_scaled"), F.asc("doc_id")))
         .alias("t_exact"),
     )
-    j = exact.join(
-        F.broadcast(cuts), exact["mean_condprob_scaled"] == cuts["s"]
-    ).select(
+    j = exact.join(F.broadcast(cuts), "mean_condprob_scaled").select(
         "doc_id",
         F.when(F.col("t_exact") == F.col("t"), 1).otherwise(0).alias("ok"),
     )

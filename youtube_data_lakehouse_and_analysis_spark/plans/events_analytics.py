@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import checkpoint, load
+from ..operators.cdf import cdf_cuts, sql_cdf_cuts
 from .queries import query
 
 
@@ -699,7 +700,7 @@ def ev13_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-_EV10A_ASSIGN_CTES = """p AS (
+_EV10A_ASSIGN_CTES = f"""p AS (
          SELECT user_id,
                 MAX(ts) AS last_purchase,
                 COUNT(*) AS frequency,
@@ -711,24 +712,9 @@ _EV10A_ASSIGN_CTES = """p AS (
                 frequency AS f_bin,
                 CAST(FLOOR(monetary) AS BIGINT) AS m_bin
          FROM p),
-       rh AS (SELECT r_bin, CAST(COUNT(*) AS BIGINT) AS cnt FROM b GROUP BY r_bin),
-       rc AS (SELECT r_bin,
-                     CAST(CEIL(5.0 * SUM(cnt) OVER (ORDER BY r_bin
-                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                          / SUM(cnt) OVER ()) AS INT) AS r_score
-              FROM rh),
-       fh AS (SELECT f_bin, CAST(COUNT(*) AS BIGINT) AS cnt FROM b GROUP BY f_bin),
-       fc AS (SELECT f_bin,
-                     CAST(CEIL(5.0 * SUM(cnt) OVER (ORDER BY f_bin
-                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                          / SUM(cnt) OVER ()) AS INT) AS f_score
-              FROM fh),
-       mh AS (SELECT m_bin, CAST(COUNT(*) AS BIGINT) AS cnt FROM b GROUP BY m_bin),
-       mc AS (SELECT m_bin,
-                     CAST(CEIL(5.0 * SUM(cnt) OVER (ORDER BY m_bin
-                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                          / SUM(cnt) OVER ()) AS INT) AS m_score
-              FROM mh),
+       {sql_cdf_cuts("rc", "b", "r_bin", 5, "r_score")},
+       {sql_cdf_cuts("fc", "b", "f_bin", 5, "f_score")},
+       {sql_cdf_cuts("mc", "b", "m_bin", 5, "m_score")},
        scored AS (
          SELECT b.user_id, b.monetary, rc.r_score, fc.f_score, mc.m_score
          FROM b JOIN rc USING (r_bin) JOIN fc USING (f_bin) JOIN mc USING (m_bin))"""
@@ -760,16 +746,7 @@ def _ev10a_scored(spark: SparkSession, sf_dir: str):
     ).transform(checkpoint)
     out = b
     for bin_col, score_col in (("r_bin", "r_score"), ("f_bin", "f_score"), ("m_bin", "m_score")):
-        hist = b.groupBy(bin_col).agg(F.count("*").alias("cnt"))
-        w_cum = Window.orderBy(bin_col).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        w_all = Window.partitionBy()
-        cuts = hist.select(
-            bin_col,
-            F.ceil(F.lit(5.0) * F.sum("cnt").over(w_cum) / F.sum("cnt").over(w_all))
-            .cast("int")
-            .alias(score_col),
-        )
-        out = out.join(F.broadcast(cuts), bin_col)
+        out = out.join(F.broadcast(cdf_cuts(b, bin_col, 5, score_col)), bin_col)
     return out.select("user_id", "monetary", "r_score", "f_score", "m_score")
 
 

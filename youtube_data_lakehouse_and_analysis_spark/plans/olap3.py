@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load
+from ..operators.cdf import cdf_cuts, sql_cdf_cuts
 from .queries import dec2, query
 
 # ---------------------------------------------------------------------------
@@ -551,16 +552,11 @@ def j16_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-_W08A_CUTS_CTES = """b AS (
+_W08A_CUTS_CTES = f"""b AS (
          SELECT o_orderkey, o_custkey,
                 CAST(FLOOR(o_totalprice) AS BIGINT) AS m_bin
          FROM orders),
-       h AS (SELECT m_bin, CAST(COUNT(*) AS BIGINT) AS cnt FROM b GROUP BY m_bin),
-       c AS (SELECT m_bin,
-                    CAST(CEIL(4.0 * SUM(cnt) OVER (ORDER BY m_bin
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                         / SUM(cnt) OVER ()) AS INT) AS price_quartile
-             FROM h)"""
+       {sql_cdf_cuts("c", "b", "m_bin", 4, "price_quartile")}"""
 
 
 def _w08a_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -570,15 +566,7 @@ def _w08a_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         F.floor("o_totalprice").cast("bigint").alias("m_bin"),
     )
-    hist = b.groupBy("m_bin").agg(F.count("*").alias("cnt"))
-    w_cum = Window.orderBy("m_bin").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    w_all = Window.partitionBy()
-    cuts = hist.select(
-        "m_bin",
-        F.ceil(F.lit(4.0) * F.sum("cnt").over(w_cum) / F.sum("cnt").over(w_all))
-        .cast("int")
-        .alias("price_quartile"),
-    )
+    cuts = cdf_cuts(b, "m_bin", 4, "price_quartile")
     return b.join(F.broadcast(cuts), "m_bin").select(
         "o_orderkey", "o_custkey", "price_quartile"
     )
